@@ -23,6 +23,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the directory holding this package: Python workers must import it to
+# unpickle the engine's UDFs, whatever directory the driver runs from
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -82,6 +85,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        # Spark prepends this to the workers' PYTHONPATH (ahead of any
+        # PYTHONPATH the driver's environment carries), so pandas UDFs
+        # do not depend on the driver's working directory
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     # Env-parameterized conf overrides (optimization r13): scale-dependent
     # settings stay tunable per deployment without code edits —

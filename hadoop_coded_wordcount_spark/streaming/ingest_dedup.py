@@ -31,13 +31,19 @@ Three stages, only the last stateful:
    watermark dedup into ``applyInPandasWithState`` inside one streaming
    query is outside Spark's supported multi-stateful combinations).
 3. :func:`ingest_neardup_stream` — near-dup bucket state
-   (``applyInPandasWithState``, update mode): state keyed by
-   ``(band, bucket)`` — the LSH bucket, the only key under which
-   near-duplicates are guaranteed to collide. Per bucket the state
-   holds a CAPPED list of representatives (doc_id + signature). An
-   arriving doc probes its bucket, estimates Jaccard against each
-   representative as the matching-minhash fraction, emits its best
-   match over threshold, and appends itself if the bucket has room.
+   (``applyInPandasWithState``, update mode). The LSH bucket is the only
+   key under which near-duplicates are guaranteed to collide, so the
+   match rules are per ``(band, bucket)``: the bucket holds a CAPPED
+   list of representatives (doc_id + signature); an arriving doc probes
+   its bucket, estimates Jaccard against each representative as the
+   matching-minhash fraction, emits its best match over threshold, and
+   appends itself if the bucket has room. The STATE key is coarser,
+   ``(band, shard)`` with ``shard = pmod(bucket, _SHARDS)``: one pandas
+   call per shard handles every arrival of its buckets, and keeps each
+   bucket's representatives, overflow count and last-seen time as flat
+   parallel arrays. Keyed by (band, bucket), state would cost one
+   Python call per touched bucket, almost all singletons, and that
+   fixed per-call cost would dominate the live query.
 
 Bounded-state argument (the 100 TB posture):
 
@@ -47,12 +53,13 @@ Bounded-state argument (the 100 TB posture):
   (the ``bucket_overflow`` output column), never silently absorbed. The
   cost is missed matches against the (cap+1)-th+ variant of
   already-flagged content — recall on fresh content is unaffected.
-* *Timeout horizon* — buckets idle past ``timeout_ms`` expire via
-  ``GroupStateTimeout.ProcessingTimeTimeout``, so live-bucket count is
-  bounded by bucket-arrival rate × horizon, not by history. Ingest-time
-  dedup answers "seen in the last T"; the beyond-horizon question stays
-  with the nightly ``dedup_incremental`` batch — the standard lambda
-  split, stated here rather than hidden.
+* *Timeout horizon* — buckets idle past ``timeout_ms`` expire with the
+  rule of Spark's per-key ``ProcessingTimeTimeout``, applied per bucket
+  inside its group, so live-bucket count is bounded by bucket-arrival
+  rate × horizon, not by history. Ingest-time dedup answers "seen in
+  the last T"; the beyond-horizon question stays with the nightly
+  ``dedup_incremental`` batch — the standard lambda split, stated here
+  rather than hidden.
 * *No text in state* — representatives store doc_id + signature only
   (k longs ≈ 256 bytes at k=32); verification is signature-estimated
   Jaccard. The batch operator's exact-Jaccard verify needs both shingle
@@ -62,6 +69,15 @@ Bounded-state argument (the 100 TB posture):
   batch-equivalence test compares pair SETS against a batch replay of
   the identical estimator, and against ``dedup_incremental`` with a
   margin).
+
+Shard layout: ``_SHARDS`` is a module constant, not a parameter, because
+a checkpoint's state is keyed by the bucket-to-group map — a restart
+with a different shard count would look every bucket up under the wrong
+group and silently lose its representatives. Stateful parallelism is at
+most ``bands × _SHARDS`` (64 at the defaults, at least the 32 stateful
+partitions of a ``local[32]`` run), and each group's state is about
+1/(bands × ``_SHARDS``) of the live state, rewritten whenever one of its
+buckets gets an arrival.
 
 Why not a stream-stream self-join on band_hash: it needs the full ingest
 history on both sides inside the watermark — state grows with the
@@ -75,14 +91,16 @@ this environment (the ``running_user_totals_v2`` precedent,
 from __future__ import annotations
 
 from collections.abc import Iterator
+from dataclasses import dataclass
 
+import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.dedup import _MINHASH_P, minhash_params, tokens_col
+from ..operators.dedup import _MINHASH_P, minhash_params
 
 __all__ = [
     "ingest_features",
@@ -97,25 +115,31 @@ MATCH_SCHEMA = (
     "doc_id bigint, matched_doc_id bigint, est_jaccard double, "
     "band int, bucket bigint, bucket_size int, bucket_overflow bigint"
 )
-# representatives as parallel columns — doc_ids[i] owns the k-slice
-# sigs[i*k:(i+1)*k]; a flat long array round-trips the state store
+_MATCH_COLUMNS = [f.split()[0] for f in MATCH_SCHEMA.split(", ")]
+# buckets per band that share one state group; part of the checkpoint's
+# state layout, like ``bands`` (see the module docstring)
+_SHARDS = 4
+# one (band, shard) group's buckets as flat parallel arrays: bucket i owns
+# sizes[i] representatives, the next slice of doc_ids, and the matching
+# sizes[i]*k slice of sigs — flat long arrays round-trip the state store
 # without nested-array serialization
-_STATE_SCHEMA = "doc_ids array<bigint>, sigs array<bigint>, overflow bigint"
+_STATE_SCHEMA = (
+    "buckets array<bigint>, sizes array<int>, overflow array<bigint>, "
+    "last_seen array<bigint>, doc_ids array<bigint>, sigs array<bigint>"
+)
 
 
-def _cw_signature_col(k: int) -> Column:
+def _cw_signature_sql(k: int) -> str:
     """Per-row md5 Carter–Wegman MinHash signature over an ``hx`` column
     (gram hashes, see :func:`ingest_features`): ``m_i = min over grams of
     (a_i·x + b_i) mod p`` — the EXACT values of the ORACLED batch
     signature table (``operators/dedup.py:minhash_wide``, which computes
     the same family via explode + groupBy-min; a per-row ``array_min``
     over the same set is the stream-legal form of the same minimum).
-    Using the DuckDB-replayable basis here is what lets the r11 registry
+    Using the DuckDB-replayable basis here is what lets the registry
     twin of this operator be value-oracled end to end — the
     ``xxhash64``-based ``_signature_col`` has no SQL replay."""
-    # ONE JVM-parsed expr (optimization r12): identical tree to the
-    # Column-object loop — int literals, same lambda, same array_min.
-    return F.expr(
+    return (
         "array("
         + ", ".join(
             f"array_min(transform(hx, x -> ({a} * x + {b}) % {_MINHASH_P}))"
@@ -125,7 +149,7 @@ def _cw_signature_col(k: int) -> Column:
     )
 
 
-def _band_bucket(b: int, r: int) -> Column:
+def _band_bucket_sql(b: int, r: int) -> str:
     """Bucket id of band ``b``: md5 over the pipe-joined r minhash values
     folded to a 56-bit BIGINT — the same md5→``conv``→long idiom the
     oracles already replay (``CAST('0x' || substr(md5(..),1,14) AS
@@ -134,9 +158,7 @@ def _band_bucket(b: int, r: int) -> Column:
         f", CAST(element_at(signature, {b * r + j + 1}) AS STRING)"
         for j in range(r)
     ) + ")"
-    return F.expr(
-        f"CAST(CONV(SUBSTRING(md5({parts}), 1, 14), 16, 10) AS BIGINT)"
-    )
+    return f"CAST(CONV(SUBSTRING(md5({parts}), 1, 14), 16, 10) AS BIGINT)"
 
 
 def ingest_features(
@@ -148,51 +170,47 @@ def ingest_features(
 
     Value discipline: grams replicate ``operators/dedup.py:shingled``
     (distinct word n-grams, docs with fewer than n tokens dropped, the
-    total-expression ``when`` guard against predicate reordering) minus
+    total-expression ``CASE`` guard against predicate reordering) minus
     its ``ensure_parallelism`` repartition — ``df.rdd`` is illegal on a
     stream, and a stream source arrives already split across tasks. The
     signature is the md5 Carter–Wegman family of the ORACLED
     ``minhash_wide`` (bit-identity pinned in tests), and band buckets
     fold md5 of the band's minhashes — every stage DuckDB-replayable,
     so the batch twin (:func:`ingest_neardup_screen`) oracles exactly.
+
+    Every projection is one SQL string parsed in the JVM — a few py4j
+    round trips, where building the same tree from Column objects costs
+    about a thousand (the analyzed trees are pinned equal in tests).
     """
     r = k // bands
-    toks = tokens_col()
-    with_toks = df.select("doc_id", toks.alias("toks")).where(
-        F.size("toks") >= n
+    # ``i + j + 1``, as the Column form parses, so the trees stay equal
+    gram = ", ".join(f"element_at(toks, i + {j} + 1)" for j in range(n))
+    band_structs = ", ".join(
+        f"named_struct('band', {b}, 'bucket', {_band_bucket_sql(b, r)})"
+        for b in range(bands)
     )
-    grams = F.when(
-        F.size("toks") >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size("toks") - n),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at("toks", i + j + 1) for j in range(n)]
-                ),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    hx = F.transform(
-        "grams",
-        lambda g: F.conv(F.substring(F.md5(g), 1, 14), 16, 10).cast("long")
-        % F.lit(_MINHASH_P),
+    return (
+        df.selectExpr(
+            "doc_id", r"filter(split(text, '\\s+'), x -> x != '') AS toks"
+        )
+        .where(f"size(toks) >= {n}")
+        .selectExpr(
+            "doc_id",
+            f"CASE WHEN size(toks) >= {n} THEN array_distinct(transform("
+            f"sequence(0, size(toks) - {n}), i -> concat_ws(' ', {gram})))"
+            " ELSE CAST(array() AS ARRAY<STRING>) END AS grams",
+        )
+        .selectExpr(
+            "doc_id",
+            "transform(grams, g -> CAST(conv(substring(md5(g), 1, 14), 16,"
+            f" 10) AS BIGINT) % {_MINHASH_P}) AS hx",
+        )
+        .selectExpr("doc_id", f"{_cw_signature_sql(k)} AS signature")
+        .selectExpr(
+            "doc_id", "signature", f"explode(array({band_structs})) AS bb"
+        )
+        .selectExpr("doc_id", "signature", "bb.band", "bb.bucket")
     )
-    sig = (
-        with_toks.select("doc_id", grams.alias("grams"))
-        .select("doc_id", hx.alias("hx"))
-        .select("doc_id", _cw_signature_col(k).alias("signature"))
-    )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"), _band_bucket(b, r).alias("bucket")
-            )
-            for b in range(bands)
-        ]
-    )
-    return sig.select(
-        "doc_id", "signature", F.explode(band_structs).alias("bb")
-    ).select("doc_id", "signature", "bb.band", "bb.bucket")
 
 
 def exact_resend_filter(
@@ -226,82 +244,124 @@ def exact_resend_filter(
     )
 
 
+@dataclass(slots=True)
+class _Bucket:
+    """One LSH bucket's state: representative ids, their signatures as
+    an (n, k) matrix, appends dropped at the cap, last arrival time."""
+
+    ids: list[int]
+    reps: np.ndarray
+    overflow: int
+    last_seen: int
+
+
+def _unpack(value, k: int) -> dict[int, _Bucket]:
+    """A group's stored ``_STATE_SCHEMA`` row as ``{bucket: _Bucket}``."""
+    buckets, sizes, overflow, seen, doc_ids, sigs = value
+    sigs = np.asarray(sigs, dtype=np.int64).reshape(-1, k)
+    doc_ids = [int(d) for d in doc_ids]
+    live, lo = {}, 0
+    for b, n, o, t in zip(buckets, sizes, overflow, seen):
+        hi = lo + int(n)
+        live[int(b)] = _Bucket(doc_ids[lo:hi], sigs[lo:hi], int(o), int(t))
+        lo = hi
+    return live
+
+
+def _pack(live: dict[int, _Bucket]) -> tuple:
+    order = sorted(live)
+    return (
+        order,
+        [len(live[b].ids) for b in order],
+        [live[b].overflow for b in order],
+        [live[b].last_seen for b in order],
+        [d for b in order for d in live[b].ids],
+        np.concatenate([live[b].reps for b in order]).ravel().tolist(),
+    )
+
+
 def _make_update(k: int, threshold: float, cap: int, timeout_ms: int | None):
-    """Build the per-bucket state update. Pure Python by design so tests
-    drive it directly with a fake GroupState (the JVM-backed one only
-    exists inside a running query)."""
+    """Build the (band, shard) group update: one call handles every
+    arrival of the group's buckets in this micro-batch. Pure Python by
+    design so tests drive it directly with a fake GroupState (the
+    JVM-backed one only exists inside a running query)."""
 
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # idle past the horizon: the bucket's representatives expire;
-            # beyond-horizon matches belong to the nightly batch leg
-            state.remove()
-            return
-        band, bucket = key
-        if state.exists:
-            doc_ids, flat, overflow = state.get
-            doc_ids, flat = list(doc_ids), list(flat)
-        else:
-            doc_ids, flat, overflow = [], [], 0
-        # deterministic arrival order inside a micro-batch: partition
-        # order is scheduler-dependent, doc_id order is not (and equals
-        # ingest order wherever ids are assigned at ingest)
-        arrivals: list[tuple[int, list[int]]] = []
-        for pdf in pdfs:
-            arrivals.extend(
-                (int(r.doc_id), [int(v) for v in r.signature])
-                for r in pdf.itertuples(index=False)
-            )
-        arrivals.sort(key=lambda a: a[0])
+        band = key[0]
+        now = state.getCurrentProcessingTimeMs()
+        live = _unpack(state.get, k) if state.exists else {}
+        frames = [pdf for pdf in pdfs if len(pdf)]
+        touched: set[int] = set()
         out: list[tuple] = []
-        for doc_id, sig in arrivals:
-            over = [
-                (sum(a == b for a, b in zip(sig, rep)) / k, rep_id)
-                for idx, rep_id in enumerate(doc_ids)
-                if rep_id != doc_id
-                for rep in [flat[idx * k : (idx + 1) * k]]
-            ]
-            over = [(e, rid) for e, rid in over if e >= threshold]
-            if over:
-                # highest estimate wins; ties break to the lowest doc_id
-                # (the batch operator's max-jaccard/min-id convention)
-                best_est, best_id = max(over, key=lambda t: (t[0], -t[1]))
-                out.append(
-                    (
-                        doc_id,
-                        best_id,
-                        round(best_est, 6),
-                        band,
-                        bucket,
-                        len(doc_ids),
-                        overflow,
-                    )
-                )
-            if doc_id in doc_ids:
-                continue  # exact resend that reached stage 3: no re-append
-            if len(doc_ids) < cap:
-                doc_ids.append(doc_id)
-                flat.extend(sig)
-            else:
-                overflow += 1
-        state.update((doc_ids, flat, overflow))
+        if frames:
+            arr = pd.concat(frames, ignore_index=True)
+            arr_bucket = arr["bucket"].to_numpy(np.int64)
+            arr_id = arr["doc_id"].to_numpy(np.int64)
+            arr_sig = np.stack(arr["signature"].to_numpy()).astype(np.int64)
+            # deterministic arrival order inside a micro-batch: partition
+            # order is scheduler-dependent, doc_id order is not (and equals
+            # ingest order wherever ids are assigned at ingest)
+            for i in np.lexsort((arr_id, arr_bucket)):
+                bucket, doc_id, sig = int(arr_bucket[i]), int(arr_id[i]), arr_sig[i]
+                st = live.get(bucket)
+                if st is None:
+                    st = _Bucket([], np.empty((0, k), np.int64), 0, now)
+                    live[bucket] = st
+                touched.add(bucket)
+                st.last_seen = now
+                if st.ids:
+                    est = np.count_nonzero(st.reps == sig, axis=1) / k
+                    # a doc never matches itself (a resend against its
+                    # own stored copy)
+                    ok = (est >= threshold) & (np.asarray(st.ids) != doc_id)
+                    if ok.any():
+                        # highest estimate wins; ties break to the lowest
+                        # doc_id (the batch operator's max-jaccard/min-id
+                        # convention)
+                        best_est = est[ok].max()
+                        best_id = min(
+                            rid for rid, e, m in zip(st.ids, est, ok)
+                            if m and e == best_est
+                        )
+                        out.append(
+                            (
+                                doc_id,
+                                best_id,
+                                round(float(best_est), 6),
+                                band,
+                                bucket,
+                                len(st.ids),
+                                st.overflow,
+                            )
+                        )
+                if doc_id in st.ids:
+                    continue  # exact resend that reached stage 3: no re-append
+                if len(st.ids) < cap:
+                    st.ids.append(doc_id)
+                    st.reps = np.vstack([st.reps, sig])
+                else:
+                    st.overflow += 1
         if timeout_ms is not None:
-            state.setTimeoutDuration(timeout_ms)
+            # Spark's per-key ProcessingTimeTimeout, per bucket: a bucket
+            # expires in the first batch past its deadline in which it
+            # gets no arrival; beyond-horizon matches belong to the
+            # nightly batch leg
+            for bucket in [b for b in live if b not in touched]:
+                if live[bucket].last_seen + timeout_ms < now:
+                    del live[bucket]
+        if not live:
+            state.remove()
+        else:
+            state.update(_pack(live))
+            if timeout_ms is not None:
+                # armed for the earliest bucket deadline; a deadline that
+                # equals now has not passed yet, and the API wants > 0
+                earliest = min(st.last_seen for st in live.values())
+                state.setTimeoutDuration(max(earliest + timeout_ms - now, 1))
         if out:
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id",
-                    "matched_doc_id",
-                    "est_jaccard",
-                    "band",
-                    "bucket",
-                    "bucket_size",
-                    "bucket_overflow",
-                ],
-            )
+            yield pd.DataFrame(out, columns=_MATCH_COLUMNS)
 
     return update
 
@@ -318,15 +378,26 @@ def ingest_neardup_stream(
     """The stage-3 near-dup screen over a (doc_id, text, ...) document
     stream: emits ``(doc_id, matched_doc_id, est_jaccard, band, bucket,
     bucket_size, bucket_overflow)`` for every arriving doc whose
-    signature-estimated Jaccard against a stored bucket representative
-    reaches ``threshold``. A doc colliding with state in several bands
-    emits per band; best-match-per-doc is one stateless groupBy away in
-    the consumer (``max_by(matched_doc_id, est_jaccard)`` per batch) —
-    kept OUT of this query because a second stateful aggregation behind
-    ``applyInPandasWithState`` is not a supported combination.
+    signature-estimated Jaccard against a stored representative of its
+    (band, bucket) reaches ``threshold``. A doc colliding with state in
+    several bands emits per band; best-match-per-doc is one stateless
+    groupBy away in the consumer (``max_by(matched_doc_id, est_jaccard)``
+    per batch) — kept OUT of this query because a second stateful
+    aggregation behind ``applyInPandasWithState`` is not a supported
+    combination.
+
+    State is grouped by ``(band, pmod(bucket, _SHARDS))``: each group's
+    one pandas call per micro-batch runs the per-bucket rules for all of
+    its buckets, so a batch costs at most ``bands × _SHARDS`` Python
+    calls however many buckets it touches. The rules themselves stay per
+    bucket — representatives, cap, overflow and expiry never mix across
+    buckets of one group. ``_SHARDS`` is fixed because the checkpointed
+    state is laid out by it; the cost is a stateful parallelism of at
+    most ``bands × _SHARDS`` tasks.
 
     Output mode must be ``update``. ``timeout_ms=None`` keeps state
-    forever (test/backfill mode); production passes the ingest horizon.
+    forever (test/backfill mode); production passes the ingest horizon,
+    after which a bucket with no arrival is dropped.
     """
     timeout = (
         GroupStateTimeout.NoTimeout
@@ -335,7 +406,11 @@ def ingest_neardup_stream(
     )
     return (
         ingest_features(stream, n=n, k=k, bands=bands)
-        .groupBy("band", "bucket")
+        .selectExpr(
+            "doc_id", "signature", "band", "bucket",
+            f"pmod(bucket, {_SHARDS}) AS shard",
+        )
+        .groupBy("band", "shard")
         .applyInPandasWithState(
             _make_update(k, threshold, cap, timeout_ms),
             outputStructType=MATCH_SCHEMA,
@@ -575,19 +650,22 @@ def ingest_neardup_live(
     the output, never silently absorbed).
 
     Scale: identical posture to :func:`ingest_neardup_stream` —
-    capped per-(band,bucket) state, signatures not text in state; the
+    capped per-bucket state in (band, shard) groups, signatures not
+    text in state; the
     memory sink holds only the emitted match rows (bounded by the
     true near-dup pair count, the same order as the oracled screen's
     output).
 
-    ``progress_out`` (r12, VERDICT r11 item 3): pass a list and the
-    run appends one ``{"state_rows": ..., "state_memory_bytes": ...}``
-    dict AFTER EACH WAVE, read from the query's last
-    StreamingQueryProgress (``numRowsTotal`` / ``memoryUsedBytes`` of
-    the state operators — a level, not a flow). This is the direct
-    capacity-planning evidence that the bucket cap bounds state growth
-    per wave; the default ``None`` changes nothing for the registry
-    path.
+    ``progress_out``: pass a list and the run appends one
+    ``{"state_rows": ..., "state_memory_bytes": ...}`` dict AFTER EACH
+    WAVE, read from the query's last StreamingQueryProgress
+    (``numRowsTotal`` / ``memoryUsedBytes`` of the state operators — a
+    level, not a flow). ``state_rows`` counts state-store rows, which
+    are (band, shard) groups, not buckets: it is at most
+    ``bands × _SHARDS``, and the bytes are the figure that grows with
+    the number of live buckets. This is the direct capacity-planning
+    evidence that the bucket cap bounds state growth per wave; the
+    default ``None`` changes nothing for the registry path.
     """
     import os
     import shutil

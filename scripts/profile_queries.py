@@ -85,20 +85,23 @@ def main() -> int:
     else:
         names = [s.strip() for s in names_arg.split(",") if s.strip()]
 
-    tracker = sc.statusTracker()
+    # job-id high-water mark: statusTracker().getJobIdsForGroup() lists at
+    # most spark.ui.retainedJobs ids, so its length stops counting on
+    # long runs
+    dag = sc._jsc.sc().dagScheduler()
     out: dict[str, dict] = {}
     for name in names:
         fn = QUERIES[name]
         rec: dict = {}
         try:
-            j0 = len(tracker.getJobIdsForGroup(None) or [])
+            j0 = dag.nextJobId()
             t0 = time.perf_counter()
             df = fn(spark, SF_DIR)
             rec["build_s"] = round(time.perf_counter() - t0, 3)
             t0 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
             rec["exec_cold_s"] = round(time.perf_counter() - t0, 3)
-            j1 = len(tracker.getJobIdsForGroup(None) or [])
+            j1 = dag.nextJobId()
             rec["jobs_cold"] = j1 - j0
             spark.catalog.clearCache()
             # warm leg: rebuild the plan from scratch with hot codegen cache
@@ -108,7 +111,7 @@ def main() -> int:
             t0 = time.perf_counter()
             df2.write.format("noop").mode("overwrite").save()
             rec["exec_warm_s"] = round(time.perf_counter() - t0, 3)
-            j2 = len(tracker.getJobIdsForGroup(None) or [])
+            j2 = dag.nextJobId()
             rec["jobs_warm"] = j2 - j1
             rec["cold_total"] = round(rec["build_s"] + rec["exec_cold_s"], 3)
             rec["warm_total"] = round(rec["build_warm_s"] + rec["exec_warm_s"], 3)

@@ -11,6 +11,7 @@ import pandas as pd
 
 from hadoop_coded_wordcount_spark.sources.catalog import load_table
 from hadoop_coded_wordcount_spark.streaming.ingest_dedup import (
+    _MATCH_COLUMNS,
     _make_update,
     exact_resend_filter,
     ingest_features,
@@ -29,11 +30,12 @@ _DOC_SCHEMA = (
 
 
 class FakeState:
-    def __init__(self, value=None, timed_out=False):
+    def __init__(self, value=None, timed_out=False, now=1_000_000):
         self._v = value
         self.hasTimedOut = timed_out
         self.removed = False
         self.timeout_ms = None
+        self.now = now
 
     @property
     def exists(self):
@@ -45,23 +47,69 @@ class FakeState:
 
     def update(self, v):
         self._v = v
+        self.removed = False
 
     def remove(self):
         self.removed = True
         self._v = None
 
     def setTimeoutDuration(self, ms):
+        assert isinstance(ms, int) and ms > 0  # the real API rejects <= 0
         self.timeout_ms = ms
 
+    def getCurrentProcessingTimeMs(self):
+        return self.now
 
-def _pdf(rows):
+
+_BUCKET = 7  # one bucket of group (band 0, shard 7 % 4)
+
+
+def _packed(buckets, last_seen=0):
+    """Group state in the flat layout from ``{bucket: (doc_ids, flat
+    signatures, overflow)}``."""
+    order = sorted(buckets)
+    return (
+        order,
+        [len(buckets[b][0]) for b in order],
+        [buckets[b][2] for b in order],
+        [last_seen] * len(order),
+        [d for b in order for d in buckets[b][0]],
+        [v for b in order for v in buckets[b][1]],
+    )
+
+
+def _unpacked(state, k):
+    """``{bucket: (doc_ids, flat signatures, overflow)}`` of a group state
+    (empty once removed)."""
+    if not state.exists:
+        return {}
+    buckets, sizes, overflow, _, doc_ids, sigs = state.get
+    out, lo = {}, 0
+    for b, n, o in zip(buckets, sizes, overflow):
+        out[b] = (
+            list(doc_ids[lo : lo + n]), list(sigs[lo * k : (lo + n) * k]), o
+        )
+        lo += n
+    return out
+
+
+def _bucket_state(state, k=4, bucket=_BUCKET):
+    return _unpacked(state, k)[bucket]
+
+
+def _pdf(rows, bucket=_BUCKET):
+    """Arrivals as the group update sees them: ``(doc_id, signature)``
+    pairs into one bucket, or ``(bucket, doc_id, signature)`` triples."""
+    rows = [r if len(r) == 3 else (bucket, *r) for r in rows]
     return pd.DataFrame(
-        [(d, s) for d, s in rows], columns=["doc_id", "signature"]
+        [(d, s, 0, b) for b, d, s in rows],
+        columns=["doc_id", "signature", "band", "bucket"],
     )
 
 
 def _drive(update, rows, state):
-    return list(update((0, 7), iter([_pdf(rows)]), state))
+    pdfs = [_pdf(rows)] if rows else []
+    return list(update((0, _BUCKET % 4), iter(pdfs), state))
 
 
 def test_update_caps_representatives_and_counts_overflow():
@@ -69,7 +117,7 @@ def test_update_caps_representatives_and_counts_overflow():
     state = FakeState()
     sig = [1, 2, 3, 4]
     out = _drive(update, [(i, sig) for i in range(5)], state)
-    doc_ids, flat, overflow = state.get
+    doc_ids, flat, overflow = _bucket_state(state)
     assert doc_ids == [0, 1] and overflow == 3
     assert flat == sig + sig
     got = pd.concat(out)
@@ -84,7 +132,9 @@ def test_update_caps_representatives_and_counts_overflow():
 def test_update_best_match_prefers_highest_estimate_then_lowest_id():
     update = _make_update(k=4, threshold=0.5, cap=32, timeout_ms=None)
     state = FakeState(
-        ([10, 11, 12], [1, 2, 3, 4, 1, 2, 3, 9, 1, 2, 3, 4], 0)
+        _packed(
+            {_BUCKET: ([10, 11, 12], [1, 2, 3, 4, 1, 2, 3, 9, 1, 2, 3, 4], 0)}
+        )
     )
     (out,) = _drive(update, [(20, [1, 2, 3, 4])], state)
     # reps 10 and 12 tie at est 1.0; rep 11 is 0.75 — lowest id of the max
@@ -94,26 +144,32 @@ def test_update_best_match_prefers_highest_estimate_then_lowest_id():
 
 def test_update_below_threshold_emits_nothing_but_appends():
     update = _make_update(k=4, threshold=0.9, cap=32, timeout_ms=None)
-    state = FakeState(([10], [1, 2, 3, 4], 0))
+    state = FakeState(_packed({_BUCKET: ([10], [1, 2, 3, 4], 0)}))
     out = _drive(update, [(20, [1, 2, 9, 9])], state)  # est 0.5 < 0.9
     assert out == []
-    doc_ids, _, overflow = state.get
+    doc_ids, _, overflow = _bucket_state(state)
     assert doc_ids == [10, 20] and overflow == 0
 
 
 def test_update_resend_matches_but_never_reappends():
     update = _make_update(k=4, threshold=0.5, cap=32, timeout_ms=None)
-    state = FakeState(([10, 20], [1, 2, 3, 4, 1, 2, 3, 4], 0))
+    state = FakeState(
+        _packed({_BUCKET: ([10, 20], [1, 2, 3, 4, 1, 2, 3, 4], 0)})
+    )
     (out,) = _drive(update, [(20, [1, 2, 3, 4])], state)
     # a doc never matches itself; it matches the OTHER identical rep
     assert out.iloc[0].matched_doc_id == 10
-    doc_ids, flat, overflow = state.get
+    doc_ids, flat, overflow = _bucket_state(state)
     assert doc_ids == [10, 20] and len(flat) == 8 and overflow == 0
 
 
 def test_update_timeout_removes_state():
     update = _make_update(k=4, threshold=0.5, cap=32, timeout_ms=1000)
-    state = FakeState(([10], [1, 2, 3, 4], 0), timed_out=True)
+    state = FakeState(
+        _packed({_BUCKET: ([10], [1, 2, 3, 4], 0)}, last_seen=0),
+        timed_out=True,
+        now=5000,
+    )
     assert _drive(update, [], state) == []
     assert state.removed
     # live path arms the processing-time timeout
@@ -130,8 +186,82 @@ def test_update_orders_same_batch_arrivals_by_doc_id():
     # 10 arrives first (no match), 20 matches 10, 30 matches 10 (min id)
     assert list(out.doc_id) == [20, 30]
     assert list(out.matched_doc_id) == [10, 10]
-    doc_ids, _, _ = state.get
+    doc_ids, _, _ = _bucket_state(state)
     assert doc_ids == [10, 20, 30]
+
+
+def test_update_keeps_buckets_of_one_group_apart():
+    """Two buckets of one (band, shard) group: same signatures, yet a doc
+    only ever matches representatives of its own bucket, and each bucket
+    keeps its own size and overflow."""
+    update = _make_update(k=4, threshold=0.5, cap=1, timeout_ms=None)
+    state = FakeState()
+    sig = [1, 2, 3, 4]
+    (out,) = _drive(
+        update, [(3, 1, sig), (7, 2, sig), (3, 4, sig), (7, 5, sig)], state
+    )
+    assert sorted(zip(out.bucket, out.doc_id, out.matched_doc_id)) == [
+        (3, 4, 1),
+        (7, 5, 2),
+    ]
+    assert _unpacked(state, 4) == {
+        3: ([1], sig, 1),
+        7: ([2], sig, 1),
+    }
+
+
+# ------------------------------------------------------------ bucket expiry
+#
+# Spark's per-key ProcessingTimeTimeout, applied per bucket: a bucket whose
+# last arrival is more than timeout_ms before the batch time expires in the
+# first batch in which it gets no arrival.
+
+
+def test_expiry_bucket_with_arrival_survives_past_its_deadline():
+    update = _make_update(k=4, threshold=0.5, cap=32, timeout_ms=1000)
+    state = FakeState(
+        _packed({_BUCKET: ([10], [1, 2, 3, 4], 0)}, last_seen=0), now=5000
+    )
+    (out,) = _drive(update, [(20, [1, 2, 3, 4])], state)
+    # the stored rep is still there to match, and the bucket lives on
+    assert list(out.matched_doc_id) == [10]
+    assert _bucket_state(state)[0] == [10, 20]
+    assert state.get[3] == [5000]  # last seen = this batch
+    assert state.timeout_ms == 1000
+
+
+def test_expiry_drops_idle_bucket_and_keeps_the_rest():
+    update = _make_update(k=4, threshold=0.5, cap=32, timeout_ms=1000)
+    packed = _packed(
+        {3: ([1], [1, 2, 3, 4], 0), _BUCKET: ([10], [5, 6, 7, 8], 2)}
+    )
+    packed[3][:] = [0, 4500]  # bucket 3 idle since 0, bucket 7 since 4500
+    state = FakeState(packed, now=5000)
+    # the arrival goes to bucket 11: bucket 3 is idle past its deadline
+    # (0 + 1000 < 5000) and drops; bucket 7 is idle but not expired
+    _drive(update, [(11, 30, [9, 9, 9, 9])], state)
+    got = _unpacked(state, 4)
+    assert set(got) == {_BUCKET, 11}
+    assert got[_BUCKET] == ([10], [5, 6, 7, 8], 2)
+    # the next deadline is bucket 7's (4500 + 1000), 500 ms from now
+    assert state.timeout_ms == 500
+
+
+def test_expiry_timeout_call_rearms_for_the_next_deadline():
+    update = _make_update(k=4, threshold=0.5, cap=32, timeout_ms=1000)
+    packed = _packed({3: ([1], [1, 2, 3, 4], 0), _BUCKET: ([10], [5, 6, 7, 8], 0)})
+    packed[3][:] = [1000, 4800]
+    state = FakeState(packed, timed_out=True, now=2500)
+    assert _drive(update, [], state) == []
+    assert not state.removed
+    assert set(_unpacked(state, 4)) == {_BUCKET}
+    assert state.timeout_ms == 4800 + 1000 - 2500
+    # a deadline equal to the batch time has not passed: kept, re-armed
+    # for the smallest legal duration
+    state = FakeState(_packed({3: ([1], [1, 2, 3, 4], 0)}, last_seen=1500),
+                      timed_out=True, now=2500)
+    _drive(update, [], state)
+    assert set(_unpacked(state, 4)) == {3} and state.timeout_ms == 1
 
 
 # ---------------------------------------------------------------------------
@@ -464,6 +594,53 @@ def test_ingest_screen_matches_duckdb_oracle(spark):
 # ---------------------------------------------------------------------------
 
 
+def _reference_update(k, threshold, cap):
+    """The per-(band, bucket) state machine the grouped update replaced,
+    one call per bucket with ``(doc_ids, flat signatures, overflow)``
+    state — the reference the property tests hold the group update to."""
+
+    def update(key, pdfs, state):
+        band, bucket = key
+        if state.exists:
+            doc_ids, flat, overflow = state.get
+            doc_ids, flat = list(doc_ids), list(flat)
+        else:
+            doc_ids, flat, overflow = [], [], 0
+        arrivals = []
+        for pdf in pdfs:
+            arrivals.extend(
+                (int(r.doc_id), [int(v) for v in r.signature])
+                for r in pdf.itertuples(index=False)
+            )
+        arrivals.sort(key=lambda a: a[0])
+        out = []
+        for doc_id, sig in arrivals:
+            over = [
+                (sum(a == b for a, b in zip(sig, rep)) / k, rep_id)
+                for idx, rep_id in enumerate(doc_ids)
+                if rep_id != doc_id
+                for rep in [flat[idx * k : (idx + 1) * k]]
+            ]
+            over = [(e, rid) for e, rid in over if e >= threshold]
+            if over:
+                best_est, best_id = max(over, key=lambda t: (t[0], -t[1]))
+                out.append(
+                    (doc_id, best_id, round(best_est, 6), band, bucket,
+                     len(doc_ids), overflow)
+                )
+            if doc_id in doc_ids:
+                continue
+            if len(doc_ids) < cap:
+                doc_ids.append(doc_id)
+                flat.extend(sig)
+            else:
+                overflow += 1
+        state.update((doc_ids, flat, overflow))
+        yield from out
+
+    return update
+
+
 try:
     from hypothesis import given, settings
     from hypothesis import strategies as st
@@ -477,11 +654,16 @@ if _HYP:
     _sig = st.lists(
         st.integers(min_value=0, max_value=3), min_size=_K, max_size=_K
     )
+    # buckets 3, 7, 11, 15 all fall in shard 3 of _SHARDS = 4
     _arrivals = st.lists(
-        st.tuples(st.integers(min_value=0, max_value=30), _sig),
+        st.tuples(st.sampled_from([3, 7, 11, 15]),
+                  st.integers(min_value=0, max_value=30), _sig),
         min_size=0,
         max_size=40,
     )
+
+    def _rows(outs):
+        return pd.concat(outs).to_dict("records") if outs else []
 
     @given(
         arrivals=_arrivals,
@@ -493,25 +675,23 @@ if _HYP:
         """Over arbitrary arrival sequences the state machine never
         raises and keeps its contract: unique capped representatives,
         flat signature store in lockstep, non-negative overflow, and
-        every emission references a representative that arrived
-        STRICTLY earlier with an estimate in [threshold, 1]."""
+        every emission references a representative of its own bucket
+        that arrived STRICTLY earlier with an estimate in [threshold,
+        1]."""
         update = _make_update(
             k=_K, threshold=threshold, cap=cap, timeout_ms=None
         )
         state = FakeState()
         out = _drive(update, arrivals, state)
-        doc_ids, flat, overflow = state.get
-        assert len(doc_ids) == len(set(doc_ids)) <= cap
-        assert len(flat) == len(doc_ids) * _K
-        assert overflow >= 0
-        rows = (
-            pd.concat(out).to_dict("records") if out else []
-        )
-        order = sorted({d for d, _ in arrivals})
-        for r in rows:
+        for doc_ids, flat, overflow in _unpacked(state, _K).values():
+            assert len(doc_ids) == len(set(doc_ids)) <= cap
+            assert len(flat) == len(doc_ids) * _K
+            assert overflow >= 0
+        for r in _rows(out):
             assert r["matched_doc_id"] != r["doc_id"]
             # doc_id-sorted processing means a match always references a
-            # strictly-earlier id, re-sends included
+            # strictly-earlier id of the same bucket, re-sends included
+            order = sorted({d for b, d, _ in arrivals if b == r["bucket"]})
             assert order.index(r["matched_doc_id"]) < order.index(
                 r["doc_id"]
             )
@@ -528,7 +708,7 @@ if _HYP:
         batch or as any consecutive two-batch split yields identical
         emissions and identical final state — the determinism that makes
         the live stream's micro-batch boundaries irrelevant to output."""
-        arrivals = sorted(arrivals, key=lambda a: a[0])
+        arrivals = sorted(arrivals, key=lambda a: a[1])
         split = min(split, len(arrivals))
         update = _make_update(
             k=_K, threshold=0.5, cap=cap, timeout_ms=None
@@ -541,13 +721,55 @@ if _HYP:
         out_two = _drive(update, arrivals[:split], two)
         out_two += _drive(update, arrivals[split:], two)
 
-        def flat_rows(outs):
-            return (
-                pd.concat(outs).to_dict("records") if outs else []
+        def by_bucket(outs):
+            return sorted(_rows(outs), key=lambda r: (r["bucket"], r["doc_id"]))
+
+        assert by_bucket(out_one) == by_bucket(out_two)
+        assert _unpacked(one, _K) == _unpacked(two, _K)
+
+    @given(
+        arrivals=_arrivals,
+        cap=st.integers(min_value=1, max_value=8),
+        threshold=st.sampled_from([0.25, 0.5, 0.75, 1.0]),
+        split=st.integers(min_value=0, max_value=40),
+    )
+    @settings(max_examples=300, deadline=None)
+    def test_group_update_equals_per_bucket_reference(
+        arrivals, cap, threshold, split
+    ):
+        """The grouped update over several buckets of one shard, in any
+        two-batch split (unsorted arrivals included), emits exactly what
+        the per-bucket reference emits bucket by bucket, and ends with the
+        same representatives, signatures and overflow in every bucket."""
+        split = min(split, len(arrivals))
+        batches = [arrivals[:split], arrivals[split:]]
+
+        group = FakeState()
+        got = []
+        for batch in batches:
+            got += _rows(
+                list(
+                    _make_update(_K, threshold, cap, None)(
+                        (0, 3), iter([_pdf(batch)] if batch else []), group
+                    )
+                )
             )
 
-        assert flat_rows(out_one) == flat_rows(out_two)
-        assert one.get == two.get
+        ref = _reference_update(_K, threshold, cap)
+        want, ref_state = [], {}
+        for batch in batches:
+            for bucket in sorted({b for b, _, _ in batch}):
+                st_b = ref_state.setdefault(bucket, FakeState())
+                rows = [(d, s) for b, d, s in batch if b == bucket]
+                want += [
+                    dict(zip(_MATCH_COLUMNS, r))
+                    for r in ref((0, bucket), iter([_pdf(rows)]), st_b)
+                ]
+
+        assert got == want
+        assert _unpacked(group, _K) == {
+            b: tuple(st_b.get) for b, st_b in ref_state.items()
+        }
 
 
 def test_ingest_screen_oracle_survives_adversarial_text(spark, tmp_path):

@@ -229,12 +229,12 @@ def test_lsh_band_structs_same_tree(spark):
 
 def test_cw_signature_col_same_tree(spark):
     from hadoop_coded_wordcount_spark.streaming.ingest_dedup import (
-        _cw_signature_col,
+        _cw_signature_sql,
     )
 
     k = 3
     df = spark.createDataFrame([(1, [7, 9, 11])], "doc_id long, hx array<bigint>")
-    sql = _cw_signature_col(k)
+    sql = F.expr(_cw_signature_sql(k))
 
     def mk(a, b):
         return F.array_min(
@@ -251,14 +251,14 @@ def test_cw_signature_col_same_tree(spark):
 
 def test_band_bucket_same_tree(spark):
     from hadoop_coded_wordcount_spark.streaming.ingest_dedup import (
-        _band_bucket,
+        _band_bucket_sql,
     )
 
     df = spark.createDataFrame(
         [(1, [5, 6, 7, 8])], "doc_id long, signature array<bigint>"
     )
     b, r = 1, 2
-    sql = _band_bucket(b, r)
+    sql = F.expr(_band_bucket_sql(b, r))
     loop = (
         F.conv(
             F.substring(
@@ -283,6 +283,68 @@ def test_band_bucket_same_tree(spark):
     assert _analyzed(df.select(sql.alias("bucket"))) == _analyzed(
         df.select(loop.alias("bucket"))
     )
+
+
+def _ingest_features_columns(df, n, k, bands):
+    """The Column-builder form of ``ingest_features`` that its SQL-string
+    form replaced (same projections, one py4j call per node)."""
+    from hadoop_coded_wordcount_spark.operators.dedup import tokens_col
+    from hadoop_coded_wordcount_spark.streaming.ingest_dedup import (
+        _band_bucket_sql,
+        _cw_signature_sql,
+    )
+
+    r = k // bands
+    with_toks = df.select("doc_id", tokens_col().alias("toks")).where(
+        F.size("toks") >= n
+    )
+    grams = F.when(
+        F.size("toks") >= n,
+        F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(0), F.size("toks") - n),
+                lambda i: F.concat_ws(
+                    " ", *[F.element_at("toks", i + j + 1) for j in range(n)]
+                ),
+            )
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    hx = F.transform(
+        "grams",
+        lambda g: F.conv(F.substring(F.md5(g), 1, 14), 16, 10).cast("long")
+        % F.lit(_MINHASH_P),
+    )
+    sig = (
+        with_toks.select("doc_id", grams.alias("grams"))
+        .select("doc_id", hx.alias("hx"))
+        .select("doc_id", F.expr(_cw_signature_sql(k)).alias("signature"))
+    )
+    band_structs = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.expr(_band_bucket_sql(b, r)).alias("bucket"),
+            )
+            for b in range(bands)
+        ]
+    )
+    return sig.select(
+        "doc_id", "signature", F.explode(band_structs).alias("bb")
+    ).select("doc_id", "signature", "bb.band", "bb.bucket")
+
+
+def test_ingest_features_same_tree(spark):
+    from hadoop_coded_wordcount_spark.streaming.ingest_dedup import (
+        ingest_features,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "a b c d", "src0")], "doc_id long, text string, source string"
+    )
+    for n, k, bands in ((3, 32, 16), (2, 8, 4)):
+        assert _analyzed(ingest_features(df, n=n, k=k, bands=bands)) == (
+            _analyzed(_ingest_features_columns(df, n, k, bands))
+        ), (n, k, bands)
 
 
 def test_ingest_match_count_unroll_value_equal(spark):
