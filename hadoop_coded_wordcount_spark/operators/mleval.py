@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from .similarity_helpers import as_double_unit, dot_unrolled, sqdist_unrolled
+
 __all__ = [
     "user_engagement_labels",
     "auc_roc",
@@ -668,8 +670,6 @@ def triplet_margin(
     equi-joins its salt — no cartesian node; pair volume is
     |anchors| x |corpus|, bounded by construction.
     """
-    from .similarity_helpers import as_double_unit, dot_unrolled_cols
-
     v = as_double_unit(embeddings)
     anchors = v.where(F.col("vec_id") % anchor_mod == 0).select(
         F.col("vec_id").alias("a"),
@@ -686,7 +686,7 @@ def triplet_margin(
     pairs = corpus.join(F.broadcast(anchors), "salt").where(
         F.col("a") != F.col("c")
     )
-    cos = dot_unrolled_cols("na", "nc", dim)
+    cos = dot_unrolled("na", "nc", dim)
     terms = pairs.select(
         "a",
         "la",
@@ -959,7 +959,7 @@ def _label_centroids(embeddings: DataFrame, dim: int):
     deterministic-mean discipline shared by the cluster-quality ops."""
     emb = F.transform("embedding", lambda x: x.cast("double"))
     base = embeddings.select("vec_id", "label", emb.alias("emb"))
-    # JVM-parsed aggregate exprs (optimization r12): identical trees to
+    # JVM-parsed aggregate exprs: identical trees to
     # the Column loops at a fraction of the py4j round trips.
     cents = base.groupBy("label").agg(
         *[
@@ -977,30 +977,6 @@ def _label_centroids(embeddings: DataFrame, dim: int):
         ).alias("cl"),
     )
     return base, centl
-
-
-def _unrolled_sqdist(a, b, dim: int):
-    """Left-to-right unrolled Σ(aᵢ−bᵢ)² from a 0.0 seed — the
-    dot_unrolled fold shape, bit-equal to the oracle's list_reduce.
-    String operands take the one-round-trip ``F.expr`` path (identical
-    analyzed tree — the similarity.dot_unrolled r12 discipline)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(
-            "0.0D + "
-            + " + ".join(
-                f"({a}[{d}] - {b}[{d}]) * ({a}[{d}] - {b}[{d}])"
-                for d in range(dim)
-            )
-        )
-    if isinstance(a, str) or isinstance(b, str):  # mixed call (ADVICE r12)
-        a, b = F.col(a) if isinstance(a, str) else a, (
-            F.col(b) if isinstance(b, str) else b
-        )
-    sq = F.lit(0.0)
-    for d in range(dim):
-        diff = a[d] - b[d]
-        sq = sq + diff * diff
-    return sq
 
 
 def silhouette_by_label(embeddings: DataFrame, dim: int = 64) -> DataFrame:
@@ -1026,7 +1002,7 @@ def silhouette_by_label(embeddings: DataFrame, dim: int = 64) -> DataFrame:
         "vec_id",
         F.col("label").alias("vlabel"),
         "clabel",
-        F.sqrt(_unrolled_sqdist("emb", "cl", dim)).alias(
+        F.sqrt(sqdist_unrolled("emb", "cl", dim, "0.0D")).alias(
             "dist"
         ),
     )
@@ -1078,7 +1054,7 @@ def davies_bouldin(embeddings: DataFrame, dim: int = 64) -> DataFrame:
     ).select(
         "label",
         F.round(
-            F.sqrt(_unrolled_sqdist("emb", "cl", dim)), 6
+            F.sqrt(sqdist_unrolled("emb", "cl", dim, "0.0D")), 6
         )
         .cast("decimal(18,6)")
         .alias("d"),
@@ -1112,7 +1088,7 @@ def davies_bouldin(embeddings: DataFrame, dim: int = 64) -> DataFrame:
             "s_i",
             F.round(
                 (F.col("s_i") + F.col("s_j"))
-                / F.sqrt(_unrolled_sqdist("ci", "cj", dim)),
+                / F.sqrt(sqdist_unrolled("ci", "cj", dim, "0.0D")),
                 6,
             ).alias("r"),
         )
@@ -1521,8 +1497,7 @@ def cox_ph_binary(
     frame (control-plane class, the markov/doremi precedent), iterated
     driver-side in integer micro-units.
 
-    The grid collect is HARD-BOUNDED by ``grid_cap`` (VERDICT r11 item
-    7): the cardinality is a property of the value domain (distinct
+    The grid collect is HARD-BOUNDED by ``grid_cap``: the cardinality is a property of the value domain (distinct
     30-day buckets — TPC-H's 7-year window yields ~85; even
     day-granularity ~2.5k), not of row count, but the code enforces
     the bound rather than inheriting it from the fixture — the collect
@@ -2230,7 +2205,7 @@ def fellegi_sunter_em(customer: DataFrame, rounds: int = 3) -> DataFrame:
                     F.col(f"sug{i}").cast("double") / (ndt - swd), 6
                 ).alias(f"u{i}")
             )
-        # LAZY checkpoint (r13): the next EM round's broadcast build —
+        # LAZY checkpoint: the next EM round's broadcast build —
         # or the final scoring join — materializes it; one fewer
         # barrier per round.
         params = m.select(*sel).localCheckpoint(eager=False)
@@ -2354,7 +2329,7 @@ def bradley_terry_sources(documents: DataFrame, rounds: int = 3) -> DataFrame:
         # rebase to the MAX strength: an arbitrary (alphabetical)
         # reference divides by zero whenever that source never wins
         refv = raw.agg(F.max(F.col("w_raw")).alias("w_ref"))
-        # LAZY checkpoint (r13): next MM round / final join materializes
+        # LAZY checkpoint: next MM round / final join materializes
         w = (
             raw.crossJoin(F.broadcast(refv))
             .select(
@@ -2457,7 +2432,7 @@ def ipf_raking(customer: DataFrame, rounds: int = 3) -> DataFrame:
                     6,
                 ).alias("w"),
             )
-            # LAZY (r13): next raking round / final select materializes
+            # LAZY: next raking round / final select materializes
             .localCheckpoint(eager=False)
         )
     return w.select(

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from .similarity_helpers import sqdist_unrolled
+
 DEC = "decimal(18,2)"
 
 
@@ -5215,7 +5217,7 @@ def seasonal_decompose(events: DataFrame, period: int = 24) -> DataFrame:
     engine-wide signed-zero audit). The trend column gets the same
     ``+ 0.0`` on both engines — counts keep it non-negative today, but
     the canonicalization costs nothing and removes the latent class
-    outright (ADVICE r8). Rows without a full centered window carry
+    outright. Rows without a full centered window carry
     NULL trend and drop out of the seasonal fit, exactly as classic
     decompose does.
 
@@ -9557,7 +9559,7 @@ def matrix_profile_hourly(events: DataFrame, w: int = 24) -> DataFrame:
     # densified grid: hours with zero events are REAL zeros in the
     # series, not gaps — otherwise a "24-hour" subsequence silently
     # spans calendar holes on sparse event types and motif/discord
-    # semantics skew (ADVICE r5). sequence() between each type's min
+    # semantics skew. sequence() between each type's min
     # and max hour is calendar-bounded, so the grid stays tiny.
     counted = events.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("hour")
@@ -9596,18 +9598,10 @@ def matrix_profile_hourly(events: DataFrame, w: int = 24) -> DataFrame:
         F.col("i").alias("bi"),
         F.col("arr").alias("ba"),
     )
-    # unrolled codegen fold (optimization r12): the nested HOF
-    # (aggregate over zip_with) evaluates INTERPRETED once per candidate
-    # pair — the exact hot-path shape similarity.dot_unrolled exists to
-    # avoid (measured ~50× there). Same left-to-right fold from the 0.0
-    # seed, so every distance is bit-identical to the HOF form and to
-    # the oracle's list_reduce.
-    d2 = F.expr(
-        "0.0D + "
-        + " + ".join(
-            f"(aa[{i}] - ba[{i}]) * (aa[{i}] - ba[{i}])" for i in range(w)
-        )
-    )
+    # unrolled codegen fold, not the nested HOF that evaluates
+    # interpreted once per candidate pair; bit-identical to the oracle's
+    # list_reduce
+    d2 = sqdist_unrolled("aa", "ba", w, "0.0D")
     pairs = (
         a.join(
             b,
@@ -9894,8 +9888,8 @@ def markov_removal_attribution(
     # The transition matrix is control-plane-sized — (channels+2)^2
     # rows, the same class as the convergence probes — so after the one
     # data-sized sessionization the fixed point runs DRIVER-SIDE
-    # (VERDICT r5 item 5: the 12 distributed rounds were pure job-launch
-    # latency, ~16.7 s at sf0.1 for a few-hundred-row state). The
+    # (the 12 distributed rounds were pure job-launch latency, ~16.7 s
+    # at sf0.1 for a few-hundred-row state). The
     # arithmetic is bit-identical to the replay: exact-int message sums
     # (< 2^53, so the float conversion is exact), ONE IEEE division per
     # (variant, state) per round, ties-away rounding back to micro-unit

@@ -32,6 +32,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from .similarity_helpers import (
+    _as_double,
+    _fold_sum,
+    _unrolled_sum,
+    as_double_normed,
+    dot_unrolled,
+    sqdist_unrolled,
+)
+
 __all__ = [
     "cosine",
     "cosine_topk",
@@ -54,7 +63,7 @@ __all__ = [
 #: (ivf_pq_recall / ann_map_at_k / matryoshka_recall): the truth leg is
 #: brute-force over queries×corpus, so a query set that is a FRACTION of
 #: the corpus keeps the audit quadratic — only a fixed budget makes it
-#: linear in the corpus (VERDICT r7 item 5).  The budget exceeds the
+#: linear in the corpus.  The budget exceeds the
 #: id-mod query count at the gate SF, so small-corpus audit values are
 #: unchanged; pass ``max_queries=None`` for the full-query audit.
 AUDIT_MAX_QUERIES: int = 16
@@ -70,7 +79,7 @@ AUDIT_MAX_QUERIES: int = 16
 ANN_MAX_CELLS: int = 256
 ANN_MAX_CODES: int = 256
 
-#: Bounded PQ TRAINING sample (SURVEY §14, VERDICT r9 item 5): Lloyd's
+#: Bounded PQ TRAINING sample (SURVEY §14): Lloyd's
 #: over the full corpus makes codebook training cost grow with the data
 #: (13.5 s of the 27 s sf1 ivf_pq_topk wall; at 100× the index spends
 #: nearly all its build time training a codebook that needs only a
@@ -117,57 +126,6 @@ def audit_qids(ids: DataFrame, query_mod: int, max_queries: int) -> DataFrame:
     )
 
 
-def _as_double(col) -> Column:
-    return F.transform(col, lambda x: x.cast("double"))
-
-
-def _fold_sum(arr: Column) -> Column:
-    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def dot_unrolled(a: Column | str, b: Column | str, dim: int) -> Column:
-    """Pairwise dot product as an unrolled sum of literal-index products.
-
-    ``aggregate(zip_with(...))`` is a *nested* higher-order function, which
-    Catalyst evaluates interpreted — no codegen, measured ~50× slower than
-    plain arithmetic — and it sits on the pair-join hot path where it runs
-    once per CANDIDATE PAIR, not per row. ``GetArrayItem`` with a literal
-    ordinal does participate in whole-stage codegen, so for a fixed,
-    known dimension the dot unrolls into a flat expression tree the JVM
-    JITs like hand-written code.
-
-    FP parity: the sum associates left-to-right from a 0.0 seed —
-    ``((0.0+p0)+p1)+...`` — exactly the ``_fold_sum`` order, so results
-    are bit-identical to the HOF form and to the DuckDB oracle's list
-    fold. Exactness is load-bearing: near-dup thresholds compare these
-    values against an exact-SQL oracle with no tolerance.
-
-    Driver-latency form (optimization r12, guide §5/§7.3): when both
-    operands are plain SQL column references passed as *strings*, the
-    whole unrolled chain is built as ONE ``F.expr`` string parsed
-    JVM-side — the Column-object loop costs ~3·dim py4j round-trips
-    (~0.5 s at dim=64 per call site, paid at every plan construction),
-    while the string parse is one round-trip. The analyzed expression
-    tree is identical either way (pinned in tests), so results cannot
-    differ.
-    """
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(
-            "0.0D + " + " + ".join(f"{a}[{i}] * {b}[{i}]" for i in range(dim))
-        )
-    if isinstance(a, str) or isinstance(b, str):
-        # A mixed (str, Column) call would fall into the Column loop where
-        # `a[i]` is PYTHON STRING INDEXING and `lit(char) * col` silently
-        # nulls via string→double cast (ADVICE r12). Normalize instead.
-        a, b = F.col(a) if isinstance(a, str) else a, (
-            F.col(b) if isinstance(b, str) else b
-        )
-    out = F.lit(0.0)
-    for i in range(dim):
-        out = out + a[i] * b[i]
-    return out
-
-
 def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity of two double arrays, deterministic fold order."""
     dot = _fold_sum(F.zip_with(a, b, lambda x, y: x * y))
@@ -197,16 +155,7 @@ def cosine_topk(
     formula, so the exact-SQL oracle still matches bit-for-bit) at a
     third of the folds and none of the interpreter overhead.
     """
-    from ..sources.catalog import ensure_parallelism
-
-    norm = F.sqrt(_fold_sum(F.transform("emb", lambda x: x * x)))
-    vecs = (
-        ensure_parallelism(
-            embeddings.select("vec_id", "embedding"), key="vec_id"
-        )
-        .select("vec_id", _as_double("embedding").alias("emb"))
-        .withColumn("nrm", norm)
-    )
+    vecs = as_double_normed(embeddings)
     queries = vecs.where(F.col("vec_id") % query_mod == 0)
     if max_queries is not None:
         queries = queries.join(
@@ -259,16 +208,7 @@ def cosine_ivf_topk(
     workload) recall tracks cell quality. Unit tests plant clusters and
     assert the planted neighbors are recovered.
     """
-    from ..sources.catalog import ensure_parallelism
-
-    norm = F.sqrt(_fold_sum(F.transform("emb", lambda x: x * x)))
-    vecs = (
-        ensure_parallelism(
-            embeddings.select("vec_id", "embedding"), key="vec_id"
-        )
-        .select("vec_id", _as_double("embedding").alias("emb"))
-        .withColumn("nrm", norm)
-    )
+    vecs = as_double_normed(embeddings)
     if centroids is None:  # default: deterministic id-sample, capped at
         # the fixed ANN_MAX_CELLS budget so the corpus×cells assignment
         # stays linear in the corpus (the nlist knob)
@@ -475,19 +415,8 @@ def embedding_lsh_pairs(
     ]
     r = bits // bands
 
-    from ..sources.catalog import ensure_parallelism
-
-    norm = F.sqrt(_fold_sum(F.transform("emb", lambda x: x * x)))
-    vecs = (
-        ensure_parallelism(
-            embeddings.select("vec_id", "embedding"), key="vec_id"
-        )
-        .select("vec_id", _as_double("embedding").alias("emb"))
-        .withColumn("nrm", norm)
-        .select(
-            "vec_id",
-            F.transform("emb", lambda x: x / F.col("nrm")).alias("ne"),
-        )
+    vecs = as_double_normed(embeddings).select(
+        "vec_id", F.transform("emb", lambda x: x / F.col("nrm")).alias("ne")
     )
 
     # Sketch in the simhash64 shape: posexplode components, then ``bits``
@@ -539,7 +468,7 @@ def embedding_lsh_pairs(
     )
     nvec = vecs.persist()
 
-    # Candidate ids first, vectors after (r11): the bucket self-join
+    # Candidate ids first, vectors after: the bucket self-join
     # emits Θ(Σ bucket_size²) rows, and carrying the unit-vector
     # payloads through it shuffles ~1 KB/row — on a dense corpus
     # (clustered buckets ≈ true neighborhoods) that join dominated the
@@ -549,7 +478,7 @@ def embedding_lsh_pairs(
     # broadcast (id → unit vector) map (~10 MB at 20 k × 64) — no
     # candidate-sized vector shuffle at all.
     #
-    # Broadcast guard (ADVICE r11): the dbscan router calls this ONCE
+    # Broadcast guard: the dbscan router calls this ONCE
     # over the UNION of all routed blocks, so broadcast size scales
     # with total routed rows, not the largest block — unguarded, a
     # dense-at-scale corpus walks into Spark's 8 GB broadcast hard
@@ -618,8 +547,8 @@ def embedding_neardup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs within a blocking key —
     EXACT at every scale, with the quadratic bounded adaptively
-    (VERDICT r5 item 3: fixed label blocks grow linearly with the
-    corpus, so their pair cells grow quadratically).
+    (fixed label blocks grow linearly with the corpus, so their pair
+    cells grow quadratically).
 
     Blocks are routed by size: blocks under ``cell_block_min`` rows
     run the salted quadratic directly (at that size the cell
@@ -660,18 +589,7 @@ def embedding_neardup_pairs(
     rather than block size squared. Cell state (boxes) is
     cells-per-block rows — never corpus-sized, never collected.
     """
-    import math
-
-    norm = F.sqrt(_fold_sum(F.transform("emb", lambda x: x * x)))
-    vecs = embeddings.select(
-        "vec_id",
-        F.col(block_on).alias("blk") if block_on else F.lit(0).alias("blk"),
-        _as_double("embedding").alias("emb"),
-    ).withColumn("nrm", norm).select(
-        "vec_id",
-        "blk",
-        F.transform("emb", lambda x: x / F.col("nrm")).alias("ne"),
-    )
+    vecs = _blocked_unit_vecs(embeddings, block_on)
     # bounded control-plane collect: one row per block key
     big_blks = [
         r.blk
@@ -759,7 +677,7 @@ def _neardup_cells(
         .where(F.col("cell_id") <= cells)
         .select("blk", "cell_id", F.col("p").alias("cp"))
     )
-    pd2 = _pq_sqdist("p", "cp", proj_dim)
+    pd2 = sqdist_unrolled("p", "cp", proj_dim, None)
     for _ in range(cell_iters):
         asg = (
             pvecs.join(F.broadcast(cents), "blk")
@@ -862,13 +780,8 @@ def kmeans_centroids(
     trained-vs-untrained comparisons isolate exactly what Lloyd's rounds
     add. Returns (cell_id, c_emb) with unit-norm centroids.
     """
-    from ..sources.catalog import ensure_parallelism
-
-    norm = F.sqrt(_fold_sum(F.transform("emb", lambda x: x * x)))
     vecs = (
-        ensure_parallelism(embeddings.select("vec_id", "embedding"), key="vec_id")
-        .select("vec_id", _as_double("embedding").alias("emb"))
-        .withColumn("nrm", norm)
+        as_double_normed(embeddings)
         .select(
             "vec_id", F.transform("emb", lambda x: x / F.col("nrm")).alias("ne")
         )
@@ -918,8 +831,8 @@ def kmeans_centroids(
             )
         )
         mnorm = F.sqrt(_fold_sum(F.transform("mean_emb", lambda x: x * x)))
-        # LAZY checkpoint (optimization r13, the star-CC/landmark-BFS
-        # discipline): the next round's broadcast-build job materializes
+        # LAZY checkpoint (the star-CC/landmark-BFS discipline): the
+        # next round's broadcast-build job materializes
         # it — one fewer driver barrier per Lloyd round, same data,
         # lineage still resets on first use.
         cents = (
@@ -969,8 +882,6 @@ def semdedup(
     fixed rounds). Output: one row per vector with its cell, keep flag,
     and the similarity that evicted it (NULL when kept).
     """
-    from ..sources.catalog import ensure_parallelism
-
     if k is None:
         # SemDeDup's cluster count SCALES with the corpus (the paper
         # runs ~110k cells on LAION): k ~ n/100 caps expected cell size
@@ -980,12 +891,8 @@ def semdedup(
         # (and the sf0.01 fixtures) exactly as before.
         k = max(24, int(embeddings.count()) // 100)
     cents = kmeans_centroids(embeddings, k=k, iters=iters, dim=dim)
-    norm = F.sqrt(_fold_sum(F.transform("emb", lambda x: x * x)))
-    vecs = (
-        ensure_parallelism(embeddings.select("vec_id", "embedding"), key="vec_id")
-        .select("vec_id", _as_double("embedding").alias("emb"))
-        .withColumn("nrm", norm)
-        .select("vec_id", F.transform("emb", lambda x: x / F.col("nrm")).alias("ne"))
+    vecs = as_double_normed(embeddings).select(
+        "vec_id", F.transform("emb", lambda x: x / F.col("nrm")).alias("ne")
     )
     cdot = dot_unrolled("ne", "c_emb", dim)
     assigned = (
@@ -1081,7 +988,7 @@ def embedding_covariance(embeddings: DataFrame, dims: int = 16) -> DataFrame:
     canonicalize the zero: a cell that rounds to exact zero keeps the
     sign of the pre-round sum (IEEE), and Spark/DuckDB can disagree on
     that sign ('0.0' vs '-0.0' stringify differently even though they
-    compare float-equal; this cost the r7 gate one cell). ``-0.0 + 0.0``
+    compare float-equal, which fails an exact gate). ``-0.0 + 0.0``
     is ``+0.0`` by IEEE-754 round-to-nearest, so both legs emit the
     same representation.
     """
@@ -1089,7 +996,7 @@ def embedding_covariance(embeddings: DataFrame, dims: int = 16) -> DataFrame:
     # would re-evaluate once per sibling aggregate (153x per row here);
     # float->double on the extracted element is the same value.
     #
-    # Optimization r12 (guide §5/§7.3 — driver latency): the 153 sibling
+    # Driver latency: the 153 sibling
     # aggregates and the 136-struct reshape array are built as SQL
     # strings parsed JVM-side in TWO py4j calls; the Column-object loops
     # cost ~1500 py4j round-trips (~6 s of plan construction at sf0.1,
@@ -1225,30 +1132,6 @@ def _pq_subvecs(
     return out.localCheckpoint(eager=True) if checkpoint else out
 
 
-def _pq_sqdist(a: Column | str, b: Column | str, sub: int) -> Column:
-    """Unrolled integer L2² over a sub-dim pair of micro-unit arrays —
-    exact BIGINT, so comparisons and sums are order-free. String operands
-    take the one-round-trip ``F.expr`` path (same tree — see
-    :func:`dot_unrolled`)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(
-            " + ".join(
-                f"({a}[{i}] - {b}[{i}]) * ({a}[{i}] - {b}[{i}])"
-                for i in range(sub)
-            )
-        )
-    if isinstance(a, str) or isinstance(b, str):  # mixed call (ADVICE r12)
-        a, b = F.col(a) if isinstance(a, str) else a, (
-            F.col(b) if isinstance(b, str) else b
-        )
-    out = None
-    for i in range(sub):
-        diff = a[i] - b[i]
-        term = diff * diff
-        out = term if out is None else out + term
-    return out
-
-
 def _pq_train_sample(svecs: DataFrame, train_sample: int) -> DataFrame:
     """The bounded training set: all subvectors of the ``train_sample``
     vector owners that sort first by md5(vec_id) — the :func:`audit_qids`
@@ -1272,7 +1155,7 @@ def _pq_train_codebook(
     train_sample: int | None = None,
 ) -> DataFrame:
     """Per-subspace Lloyd's k-means on the integer micro-unit subvectors
-    (VERDICT r5 item 2: the trained codebook pq_topk lacked). Init is the
+    (the trained codebook pq_topk lacked). Init is the
     deterministic id-sample (vec_id % code_mod == 0), so train_iters=0
     recovers the untrained baseline and trained-vs-untrained recall
     comparisons isolate exactly what the Lloyd rounds add.
@@ -1320,7 +1203,7 @@ def _pq_train_codebook(
     train = svecs
     if train_sample is not None and train_iters > 0:
         train = _pq_train_sample(svecs, train_sample)
-    d = _pq_sqdist("sv", "cv", sub)
+    d = sqdist_unrolled("sv", "cv", sub, None)
     for _ in range(train_iters):
         asg = (
             train.join(F.broadcast(cb), "j")
@@ -1331,7 +1214,7 @@ def _pq_train_codebook(
             )
             .select("j", F.col("b.code_id").alias("code_id"), "sv")
         )
-        # LAZY checkpoint (optimization r13): the next Lloyd round's
+        # LAZY checkpoint: the next Lloyd round's
         # broadcast-build job — or the caller's encode pass after the
         # last round — materializes it; one fewer barrier per round.
         cb = (
@@ -1382,7 +1265,7 @@ def pq_topk(
     ADC stage for stage (``train_iters=0`` recovers the untrained
     id-sample baseline; the recall test pins trained > untrained).
 
-    EXACT RE-RANKING (default, VERDICT r7 item 7): the ADC scan keeps a
+    EXACT RE-RANKING (default): the ADC scan keeps a
     ``rerank_mult·k`` shortlist per query, whose raw subvectors are then
     scored by the exact integer L2² and re-ranked — the two-stage
     retrieve-then-rerank every production PQ deployment runs, because
@@ -1413,7 +1296,7 @@ def pq_topk(
         max_codes=max_codes,
         train_sample=train_sample,
     )
-    d = _pq_sqdist("sv", "cv", sub)
+    d = sqdist_unrolled("sv", "cv", sub, None)
     enc = (
         svecs.join(F.broadcast(cb), "j")
         .groupBy("vec_id", "j")
@@ -1423,7 +1306,7 @@ def pq_topk(
     qsv = svecs.where(F.col("vec_id") % query_mod == 0).select(
         F.col("vec_id").alias("query_id"), "j", F.col("sv").alias("qv")
     )
-    qd = _pq_sqdist("qv", "cv", sub)
+    qd = sqdist_unrolled("qv", "cv", sub, None)
     dtab = qsv.join(F.broadcast(cb), "j").select(
         "query_id", "j", "code_id", qd.alias("d")
     )
@@ -1447,7 +1330,7 @@ def pq_topk(
     if rerank_mult is None:
         ranked = shortlist
     else:
-        dx = _pq_sqdist("qv", "sv", sub)
+        dx = sqdist_unrolled("qv", "sv", sub, None)
         wr = Window.partitionBy("query_id").orderBy(
             F.asc("d2"), F.asc("neighbor_id")
         )
@@ -1547,11 +1430,11 @@ def ivf_pq_topk(
     never the raw vector). Candidate generation reuses the IVF
     assignment/probe stages (:func:`cosine_ivf_topk`); scoring uses the
     TRAINED per-subspace PQ codebook (:func:`_pq_train_codebook`,
-    integer micro-unit Lloyd's — VERDICT r5 item 2) with the same
+    integer micro-unit Lloyd's) with the same
     exact-BIGINT ADC sum as :func:`pq_topk`, so the composition stays
     oracle-exact end to end, training included.
 
-    RESIDUAL encoding (default, VERDICT r7 item 7 — the Jégou IVFADC
+    RESIDUAL encoding (default, the Jégou IVFADC
     form): PQ trains on and encodes ``vector − assigned-cell centroid``
     instead of the raw vector, and each query builds one ADC table PER
     PROBED CELL from ``query − that cell's centroid``. Residuals have a
@@ -1569,16 +1452,10 @@ def ivf_pq_topk(
     which is the honest production trade; the ann_recall_metrics
     pattern measures it.
     """
-    from ..sources.catalog import ensure_parallelism
-
     sub = dim // m
-    vecs = ensure_parallelism(
-        embeddings.select("vec_id", "embedding"), key="vec_id"
-    ).select("vec_id", _as_double("embedding").alias("emb"))
 
     # --- IVF stage: cell assignment + query probes (cosine geometry) ---
-    norm = F.sqrt(_fold_sum(F.transform("emb", lambda x: x * x)))
-    nvecs = vecs.withColumn("nrm", norm)
+    nvecs = as_double_normed(embeddings)
     cents = nvecs.where(F.col("vec_id") % centroid_mod == 0)
     if max_cells is not None:  # fixed nlist budget — see ANN_MAX_CELLS
         cents = cents.join(
@@ -1650,8 +1527,8 @@ def ivf_pq_topk(
         # which measurably DESTROYS the residual advantage
         # materialize subvector+cell ONCE: the anchor aggregate, the
         # residual subtraction, and (when the frame is our own) the
-        # query-subvector read all consume the same join (VERDICT r8
-        # item 4 — the minhash_lsh_pairs one-projection lesson)
+        # query-subvector read all consume the same join (the
+        # minhash_lsh_pairs one-projection lesson)
         sa = svecs.join(assigned, "vec_id").localCheckpoint(eager=True)
         if own_svecs:
             # every vector carries a cell (argmax over the broadcast
@@ -1663,8 +1540,8 @@ def ivf_pq_topk(
     qsv = qsv.select(
         F.col("vec_id").alias("query_id"), "j", F.col("sv").alias("qv")
     )
-    d = _pq_sqdist("sv", "cv", sub)
-    qd = _pq_sqdist("qv", "cv", sub)
+    d = sqdist_unrolled("sv", "cv", sub, None)
+    qd = sqdist_unrolled("qv", "cv", sub, None)
     if residual:
         csv = (
             sa.groupBy("cell_id", "j")
@@ -2010,7 +1887,7 @@ def embedding_drift(embeddings: DataFrame, dim: int = 64) -> DataFrame:
 
     Scale: one scan, two partial-agg rows of 64 sums each.
     """
-    # JVM-parsed expr strings (optimization r12): identical trees to the
+    # JVM-parsed expr strings: identical trees to the
     # Column loops — ~1300 py4j round trips of plan construction saved.
     comps = embeddings.selectExpr(
         "vec_id % 2 AS half",
@@ -2032,19 +1909,10 @@ def embedding_drift(embeddings: DataFrame, dim: int = 64) -> DataFrame:
         "n AS n_b",
         *[f"CAST(s{i} AS DOUBLE) / n AS b{i}" for i in range(dim)],
     )
-    dot = F.expr(
-        "0.0D + " + " + ".join(f"a{i} * b{i}" for i in range(dim))
-    )
-    na = F.expr(
-        "0.0D + " + " + ".join(f"a{i} * a{i}" for i in range(dim))
-    )
-    nb = F.expr(
-        "0.0D + " + " + ".join(f"b{i} * b{i}" for i in range(dim))
-    )
-    l2 = F.expr(
-        "0.0D + "
-        + " + ".join(f"(a{i} - b{i}) * (a{i} - b{i})" for i in range(dim))
-    )
+    dot = _unrolled_sum(lambda i: f"a{i} * b{i}", dim, "0.0D")
+    na = _unrolled_sum(lambda i: f"a{i} * a{i}", dim, "0.0D")
+    nb = _unrolled_sum(lambda i: f"b{i} * b{i}", dim, "0.0D")
+    l2 = _unrolled_sum(lambda i: f"(a{i} - b{i}) * (a{i} - b{i})", dim, "0.0D")
     return a.join(b).select(
         "n_a",
         "n_b",
@@ -2333,7 +2201,7 @@ def dbscan_density_probe(
 ) -> DataFrame:
     """Per-block ε-graph density estimate from a bounded deterministic
     sample — the routing signal :func:`dbscan_embeddings` reads before
-    choosing its pair generator (VERDICT r10 item 3: exact pair
+    choosing its pair generator (exact pair
     enumeration is Θ(rows × avg-degree), so on DENSE data the exact
     ε-graph is itself the scale problem, and block SIZE cannot see
     density).
@@ -2352,7 +2220,7 @@ def dbscan_density_probe(
     in BIGINT arithmetic so Spark and the DuckDB oracle can never
     disagree on a float boundary.
     """
-    nv = _dbscan_vecs(embeddings, block_on, dim)
+    nv = _blocked_unit_vecs(embeddings, block_on)
     w = Window.partitionBy("blk").orderBy(
         F.md5(F.col("vec_id").cast("string").cast("binary")), "vec_id"
     )
@@ -2403,11 +2271,9 @@ def dbscan_density_probe(
     )
 
 
-def _dbscan_vecs(
-    embeddings: DataFrame, block_on: str | None, dim: int
-) -> DataFrame:
-    """(vec_id, blk, unit vector) — the shared normalize-first frame of
-    the probe and both pair generators."""
+def _blocked_unit_vecs(embeddings: DataFrame, block_on: str | None) -> DataFrame:
+    """(vec_id, blk, ne): the normalize-first frame shared by the
+    blocked near-dup pairs and the DBSCAN probe and pair generators."""
     norm = F.sqrt(_fold_sum(F.transform("emb", lambda x: x * x)))
     return (
         embeddings.select(
@@ -2447,7 +2313,7 @@ def dbscan_embeddings(
     is noise — the full density-clustering story without a single new
     join shape.
 
-    Density routing (VERDICT r10 item 3 — the round's one perf-weak):
+    Density routing:
     exact pair enumeration costs Θ(rows × avg-degree), so when the
     ε-graph itself is dense (the replicated scale fixture grows
     neighborhood pairs ~100× per 10× rows) "exact by theorem" stops
@@ -2500,7 +2366,7 @@ def dbscan_embeddings(
     """
     from . import dedup as dd
 
-    nv = _dbscan_vecs(embeddings, block_on, dim)
+    nv = _blocked_unit_vecs(embeddings, block_on)
     routed: list = []
     if route_degree is not None:
         # bounded control-plane collects: one row per block key
@@ -2576,7 +2442,7 @@ def dbscan_embeddings(
         # isNull survival: a NULL block label fails BOTH isin(routed)
         # and ~isin(routed) (three-valued logic) — such rows belong on
         # the exact side (they pair with nothing, see the probe note
-        # above) and must not vanish from the union (ADVICE r11).
+        # above) and must not vanish from the union.
         sparse = embeddings.where(
             (~blk_col.isin(routed)) | blk_col.isNull()
         )
@@ -2712,7 +2578,7 @@ def l2_topk_exact(
     ranking the PQ family approximates (PQ's ADC is L2², not cosine, so
     :func:`cosine_topk` is the wrong yardstick for it). Distances are
     exact BIGINT sums of the per-subspace integer L2² (the same
-    ``_pq_sqdist`` both PQ stages use), so ranking and ties are
+    ``sqdist_unrolled`` both PQ stages use), so ranking and ties are
     bit-identical in any engine and at any parallelism.
 
     Scale: queries broadcast against the corpus; per-candidate work is
@@ -2735,7 +2601,7 @@ def l2_topk_exact(
     q = q.select(
         F.col("vec_id").alias("query_id"), "j", F.col("sv").alias("qv")
     )
-    d = _pq_sqdist("qv", "sv", sub)
+    d = sqdist_unrolled("qv", "sv", sub, None)
     w = Window.partitionBy("query_id").orderBy(
         F.asc("d2"), F.asc("neighbor_id")
     )
@@ -2771,7 +2637,7 @@ def ivf_pq_recall(
     are exact values the oracle replays stage for stage. The micro
     subvector frame builds ONCE and feeds both legs.
 
-    Scale (VERDICT r7 item 5): the truth leg is brute-force
+    Scale: the truth leg is brute-force
     queries×corpus — quadratic while the id-mod query set tracks corpus
     size (a fractional sample only rescales the quadratic). The default
     caps the audit at a FIXED ``AUDIT_MAX_QUERIES`` budget — the ids
@@ -2785,7 +2651,7 @@ def ivf_pq_recall(
     svecs = _pq_subvecs(embeddings, 8, 64)
     # one budgeted query-id set feeds BOTH legs (same query_mod, same
     # md5 order): computing it per leg cost an extra corpus-wide
-    # distinct + takeOrdered on the truth side (VERDICT r8 item 4)
+    # distinct + takeOrdered on the truth side
     qids = (
         audit_qids(embeddings.select("vec_id"), 100, max_queries)
         .localCheckpoint(eager=True)

@@ -49,6 +49,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from .dedup import tokens_col
+from .similarity_helpers import _unrolled_sum
 
 __all__ = [
     "kmv_distinct",
@@ -1069,9 +1070,7 @@ def ams_f2(df: DataFrame, key_col: str, m: int = 64) -> DataFrame:
     so DuckDB replays the whole row bit for bit.
     """
     regs = ams_registers(df, key_col, m)
-    sum_x2 = F.expr(
-        "0 + " + " + ".join(f"x{j} * x{j}" for j in range(m))
-    ).cast("bigint")
+    sum_x2 = _unrolled_sum(lambda j: f"x{j} * x{j}", m, "0").cast("bigint")
     exact = (
         df.where(F.col(key_col).isNotNull())
         .groupBy(key_col)
@@ -1127,9 +1126,7 @@ def ams_join_size(
     """
     ra = ams_registers(dfa, key_a, m, prefix="a")
     rb = ams_registers(dfb, key_b, m, prefix="b")
-    sum_xy = F.expr(
-        "0 + " + " + ".join(f"a{j} * b{j}" for j in range(m))
-    ).cast("bigint")
+    sum_xy = _unrolled_sum(lambda j: f"a{j} * b{j}", m, "0").cast("bigint")
     fa = (
         dfa.where(F.col(key_a).isNotNull())
         .groupBy(F.col(key_a).alias("k"))

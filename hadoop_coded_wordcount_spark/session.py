@@ -26,6 +26,12 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # the directory holding this package: Python workers must import it to
 # unpickle the engine's UDFs, whatever directory the driver runs from
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# HotSpot never JIT-compiles a method over 8,000 bytecode bytes while
+# DontCompileHugeMethods is on (its default), and whole-stage codegen emits
+# bigger ones for the unrolled pair kernels (a 64-dim dot_unrolled stage:
+# 11,308 bytes), which then run interpreted: 4 M such pairs on 4 cores
+# took 49-52 s a pass instead of 4-5 s.
+_JVM_OPTIONS = "-XX:-DontCompileHugeMethods"
 
 
 def get_spark(
@@ -49,7 +55,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # parallelismFirst stays at its DEFAULT (true). Tested r13 with
+        # parallelismFirst stays at its DEFAULT (true). Tested with
         # interleaved min-of-2 A/B over a 16-query set (the 7 heaviest +
         # the 9 the first trial flagged): advisory-size coalescing
         # (parallelismFirst=false) read 72.4-78.2 s vs 55.6-56.6 s at the
@@ -89,8 +95,11 @@ def get_spark(
         # PYTHONPATH the driver's environment carries), so pandas UDFs
         # do not depend on the driver's working directory
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        # the default options are prepended to a caller's extraJavaOptions
+        .config("spark.driver.defaultJavaOptions", _JVM_OPTIONS)
+        .config("spark.executor.defaultJavaOptions", _JVM_OPTIONS)
     )
-    # Env-parameterized conf overrides (optimization r13): scale-dependent
+    # Env-parameterized conf overrides: scale-dependent
     # settings stay tunable per deployment without code edits —
     # SPARK_GRAFT_CONF="spark.a=b;spark.c=d". Applied before extra_conf so
     # an explicit caller still wins.

@@ -96,11 +96,12 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.dedup import _MINHASH_P, minhash_params
+from ..operators.similarity_helpers import _unrolled_sum
 
 __all__ = [
     "ingest_features",
@@ -159,6 +160,18 @@ def _band_bucket_sql(b: int, r: int) -> str:
         for j in range(r)
     ) + ")"
     return f"CAST(CONV(SUBSTRING(md5({parts}), 1, 14), 16, 10) AS BIGINT)"
+
+
+def _match_count(k: int) -> Column:
+    """Number of equal positions of ``signature`` and ``rep_sig`` (both
+    length ``k``): an unrolled codegen CASE sum from a 0 seed, not the
+    nested HOF that evaluates interpreted once per candidate pair — the
+    same left-to-right fold, so counts are bit-identical."""
+    return _unrolled_sum(
+        lambda i: f"(CASE WHEN signature[{i}] = rep_sig[{i}] THEN 1 ELSE 0 END)",
+        k,
+        "0",
+    )
 
 
 def ingest_features(
@@ -223,7 +236,7 @@ def exact_resend_filter(
     at-least-once cleanup shape as ``streaming/joins.py``'s content-key
     dedup, applied to the document ingest.
 
-    NULL text never collapses (ADVICE r10): ``sha2(NULL)`` is NULL and
+    NULL text never collapses: ``sha2(NULL)`` is NULL and
     ``dropDuplicatesWithinWatermark`` groups NULL keys as equal, which
     would silently fold every distinct NULL-text document inside the
     horizon into one. The key therefore falls back to the document id
@@ -430,8 +443,7 @@ def ingest_neardup_screen(
 ) -> DataFrame:
     """BATCH replay of the ingest stream at cap=∞ / no timeout — the
     registry twin that a DuckDB oracle can value-check end to end
-    (md5-CW signatures, md5-fold buckets, integer match counts; the
-    oracle lands with the r11 registry unfreeze).
+    (md5-CW signatures, md5-fold buckets, integer match counts).
 
     Arrival order is ``dedup_incremental``'s split replayed as a stream
     would see it: the existing half (src0-9) ingests first, then the new
@@ -473,19 +485,7 @@ def ingest_neardup_screen(
         (F.col("rep_wave") == F.col("wave"))
         & (F.col("rep_id") < F.col("doc_id"))
     )
-    # unrolled codegen fold (optimization r12): the nested HOF evaluated
-    # INTERPRETED once per candidate pair on the bucket join hot path;
-    # the unrolled CASE chain is the same left-to-right fold from the 0
-    # seed — bit-identical match counts (signature length is fixed k).
-    matches = F.expr(
-        "0 + "
-        + " + ".join(
-            f"(CASE WHEN signature[{i}] = rep_sig[{i}]"
-            " THEN 1 ELSE 0 END)"
-            for i in range(k)
-        )
-    )
-    est = matches.cast("double") / F.lit(float(k))
+    est = _match_count(k).cast("double") / F.lit(float(k))
     w = Window.partitionBy("doc_id", "band", "bucket").orderBy(
         F.desc("est_jaccard"), F.asc("matched_doc_id")
     )
@@ -515,15 +515,14 @@ def ingest_neardup_screen_oracle_sql(
     over the k minima, and the best-per-(doc, band, bucket) window.
     Every screen parameter (threshold, k, bands, shingle width ``n``)
     is mirrored here so a non-default call cannot silently diverge
-    from its oracle (ADVICE r10 — the first cut hardcoded trigrams).
+    from its oracle.
 
     Tokenizer dialect note: Java's ``\\s`` (Spark ``split``) includes
     vertical tab ``\\x0b``; RE2's (DuckDB ``string_split_regex``) does
     not — so the oracle splits on ``[\\s\\x0b]+`` to match Spark
     byte-for-byte on adversarial text (pinned in tests; no gate corpus
     contains \\x0b, so the registry's plain-``\\s+`` text oracles are
-    unaffected there — divergence recorded in SURVEY §15 for the r11
-    sweep)."""
+    unaffected there — divergence recorded in SURVEY §15)."""
     r = k // bands
     mins = ",\n             ".join(
         f"min(({a} * x + {b}) % {_MINHASH_P}) AS m{i}"
@@ -681,7 +680,7 @@ def ingest_neardup_live(
         # NULL, which would fail BOTH wave1 and ~wave1 (three-valued
         # logic) and silently drop the row from the replay — such rows
         # ride wave 1 instead, so wave1 ∪ wave2 always partitions the
-        # input (ADVICE r11).
+        # input.
         wave1 = (
             F.coalesce(
                 F.regexp_extract("source", r"(\d+)$", 1).cast("int"),

@@ -349,7 +349,12 @@ def test_ingest_features_same_tree(spark):
 
 def test_ingest_match_count_unroll_value_equal(spark):
     # Execution-mode change (interpreted nested HOF -> codegen CASE sum):
-    # trees legitimately differ, so the pin is exact VALUE equality.
+    # trees legitimately differ, so the pin is exact VALUE equality of the
+    # screen's own expression.
+    from hadoop_coded_wordcount_spark.streaming.ingest_dedup import (
+        _match_count,
+    )
+
     k = 8
     df = spark.createDataFrame(
         [
@@ -359,13 +364,7 @@ def test_ingest_match_count_unroll_value_equal(spark):
         ],
         "signature array<bigint>, rep_sig array<bigint>",
     )
-    unrolled = F.expr(
-        "0 + "
-        + " + ".join(
-            f"(CASE WHEN signature[{i}] = rep_sig[{i}] THEN 1 ELSE 0 END)"
-            for i in range(k)
-        )
-    )
+    unrolled = _match_count(k)
     hof = F.aggregate(
         F.zip_with(
             "signature", "rep_sig", lambda a, b: F.when(a == b, 1).otherwise(0)

@@ -484,3 +484,37 @@ def test_dbscan_routed_branch_plan_hygiene(spark):
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+#: Pair-quadratic hot paths built on the unrolled kernels of
+#: operators/similarity_helpers.py — the registry's largest generated
+#: methods.
+_UNROLLED_KERNEL_QUERIES = (
+    "embedding_neardup_pairs",
+    "ivf_pq_topk",
+    "silhouette_by_label",
+    "matrix_profile_hourly",
+    "ingest_neardup_screen",
+)
+
+
+@pytest.mark.parametrize("name", _UNROLLED_KERNEL_QUERIES)
+def test_unrolled_kernels_stay_in_whole_stage_codegen(spark, name, monkeypatch):
+    """Over ``spark.sql.codegen.hugeMethodLimit`` bytes of bytecode in one
+    generated method, Spark silently switches whole-stage codegen off for
+    the subtree: results stay right, the kernel runs interpreted."""
+    from hadoop_coded_wordcount_spark.sources import catalog
+
+    # keep the kernel in the query's own plan, not in the job that
+    # checkpoints a bounded result (matrix_profile_hourly)
+    monkeypatch.setattr(catalog, "finish_cached", lambda out, *cached: out)
+    df = QUERIES[name](spark, SF001)
+    df.collect()  # the final adaptive plan, with its codegen stages
+    plan = df._jdf.queryExecution().executedPlan()
+    spark.catalog.clearCache()
+    assert "*(" in plan.toString(), name
+    limit = int(spark.conf.get("spark.sql.codegen.hugeMethodLimit"))
+    debug = getattr(spark._jvm.org.apache.spark.sql.execution.debug, "package")
+    stages = debug.codegenStringSeq(plan)
+    sizes = [stages.apply(i)._3().maxMethodCodeSize() for i in range(stages.size())]
+    assert sizes and max(sizes) <= limit, (name, sizes, limit)

@@ -47,3 +47,14 @@ def test_pandas_udf_query_runs_from_a_foreign_cwd(tmp_path):
     assert proc.returncode == 0, proc.stderr[-3000:]
     # the DuckDB oracle of image_ahash_neardup returns 50 rows at sf0.001
     assert json.loads(proc.stdout.strip().splitlines()[-1])["rows"] == 50
+
+
+def test_huge_generated_methods_are_jit_compiled(spark):
+    """Whole-stage codegen emits methods over HotSpot's 8,000-byte compile
+    limit for the unrolled pair kernels; ``get_spark`` lifts that limit,
+    so they are JIT-compiled instead of interpreted."""
+    jvm = spark._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    assert bean.getVMOption("DontCompileHugeMethods").getValue() == "false"

@@ -3,9 +3,16 @@ plus recall/structure checks against the real embeddings table."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
+from pyspark.sql import functions as F
 
 from hadoop_coded_wordcount_spark.operators import similarity as sim
+from hadoop_coded_wordcount_spark.operators.similarity import dot_unrolled
+from hadoop_coded_wordcount_spark.operators.similarity_helpers import (
+    sqdist_unrolled,
+)
 from hadoop_coded_wordcount_spark.sources.catalog import load_table
 
 SF001 = "/root/testdata/sf0.01"
@@ -980,3 +987,108 @@ def test_dbscan_forced_routing_matches_full_oracle_replay(spark):
     assert got == want and got
     # and the routing actually fired: every row flagged approximate
     assert all(r[3] for r in got)
+
+
+# ---------------------------------------------------------------------------
+# Unrolled pair kernels (operators/similarity_helpers.py): each JVM-parsed
+# F.expr string must analyze to the same tree as the Column loop it stands
+# for — equal trees cannot give different results.
+# ---------------------------------------------------------------------------
+
+
+def _analyzed(df):
+    # expression ids (#NNN) are allocation-order artifacts, not semantics
+    return re.sub(
+        r"#\d+", "#x", df._jdf.queryExecution().analyzed().toString()
+    )
+
+
+def _sqdist_columns(a, b, n, seed):
+    """Column-loop reference for ``sqdist_unrolled``: no seed starts the
+    sum at the first term, a float seed folds from ``F.lit(seed)``."""
+    out = None if seed is None else F.lit(seed)
+    for i in range(n):
+        diff = F.col(a)[i] - F.col(b)[i]
+        out = diff * diff if out is None else out + diff * diff
+    return out
+
+
+def _pair_frame(spark):
+    a = spark.createDataFrame(
+        [(1, [0.1, -0.2, 0.3, -0.0]), (2, [-0.0, 0.5, -1.25, 2.0])],
+        "id long, ne array<double>",
+    ).alias("a")
+    b = a.selectExpr("id as idb", "ne as nb").alias("b")
+    return a.crossJoin(b)
+
+
+def test_dot_unrolled_string_path_same_tree(spark):
+    j = _pair_frame(spark)
+    loop = dot_unrolled(F.col("a.ne"), F.col("b.nb"), 4)
+    sql = dot_unrolled("a.ne", "b.nb", 4)
+    assert _analyzed(j.select(loop.alias("v"))) == _analyzed(
+        j.select(sql.alias("v"))
+    )
+
+
+def test_sqdist_unrolled_bigint_same_tree(spark):
+    # the PQ form: unseeded, over BIGINT micro-unit arrays
+    j = (
+        _pair_frame(spark)
+        .selectExpr(
+            "transform(ne, x -> cast(round(x * 1e6) as long)) as sv",
+            "transform(nb, x -> cast(round(x * 1e6) as long)) as qv",
+        )
+    )
+    loop = _sqdist_columns("qv", "sv", 4, None)
+    sql = sqdist_unrolled("qv", "sv", 4, None)
+    assert _analyzed(j.select(loop.alias("v"))) == _analyzed(
+        j.select(sql.alias("v"))
+    )
+
+
+def test_sqdist_unrolled_double_seed_same_tree(spark):
+    # the ML-eval form: double arrays folded from a 0.0 seed
+    j = _pair_frame(spark)
+    loop = _sqdist_columns("ne", "nb", 4, 0.0)
+    sql = sqdist_unrolled("ne", "nb", 4, "0.0D")
+    assert _analyzed(j.select(loop.alias("v"))) == _analyzed(
+        j.select(sql.alias("v"))
+    )
+
+
+def test_matrix_profile_d2_same_tree(spark, monkeypatch):
+    """The window distance inside matrix_profile_hourly's own plan is the
+    Column-loop fold over its ``w`` hourly counts."""
+    import datetime
+
+    from hadoop_coded_wordcount_spark.operators import relational as rel
+    from hadoop_coded_wordcount_spark.sources import catalog
+
+    # the lazy plan, not the checkpoint the operator returns
+    monkeypatch.setattr(catalog, "finish_cached", lambda out, *cached: out)
+    w = 3
+    t0 = datetime.datetime(2024, 5, 1)
+    ev = spark.createDataFrame(
+        [("view", t0 + datetime.timedelta(hours=h)) for h in range(8)],
+        "event_type string, ts timestamp",
+    )
+    ref = spark.createDataFrame(
+        [([1.0, 2.0, 3.0], [3.0, 2.0, 1.0])], "aa array<double>, ba array<double>"
+    ).select(_sqdist_columns("aa", "ba", w, 0.0).alias("d2"))
+    d2 = re.search(r"Project \[(.*) AS d2#x\]", _analyzed(ref)).group(1)
+    plan = _analyzed(rel.matrix_profile_hourly(ev, w=w))
+    spark.catalog.clearCache()
+    assert f"{d2} AS d2#x" in plan
+
+
+def test_dot_unrolled_signed_zero_seed(spark):
+    # the 0.0 seed canonicalizes an all-(-0.0)-terms dot to +0.0; the
+    # string path must keep that (it matters after ROUND + stringify)
+    df = spark.createDataFrame(
+        [([-0.0, 0.0], [1.0, 0.0])], "x array<double>, y array<double>"
+    )
+    row = df.select(
+        dot_unrolled("x", "y", 2).cast("string").alias("s")
+    ).first()
+    assert row.s == "0.0"
